@@ -75,11 +75,10 @@ object Bench {
     spark.range(1L << 20).selectExpr("sum(id)").collect()
     Tables.all.foreach(t => Tables(spark, sfDir, t).limit(1).count())
 
-    // Default: execute the query's own physical plan (all output columns,
+    // Execute the query's own physical plan (all output columns,
     // final sort included) — a count() on top lets Catalyst prune
     // deterministic projections and measures little more than the scan for
-    // map-only queries. SPARK_GRAFT_BENCH_COUNT=1 restores the count()
-    // timing for apples-to-apples comparison against older rounds.
+    // map-only queries.
     //
     // Contention robustness: the whole suite runs SPARK_GRAFT_BENCH_RUNS
     // times round-robin (pass 1 = every query once in order, then pass 2,
@@ -95,7 +94,6 @@ object Bench {
     // in the artifact itself. min-of-N also stays the steadier
     // steady-state estimate: pass 1 absorbs first-use JIT/codegen for
     // plans unique to a query.
-    val legacyCount = sys.env.contains("SPARK_GRAFT_BENCH_COUNT")
     val trace = sys.env.contains("SPARK_GRAFT_BENCH_TRACE")
     // 3 passes by default: with the full per-pass duration arrays emitted
     // under "passes" (below), one contention-polluted pass is identifiable
@@ -117,7 +115,7 @@ object Bench {
       val t0 = System.nanoTime()
       try {
         val df = Queries.all(name)(spark, sfDir)
-        if (legacyCount) df.count() else df.queryExecution.toRdd.count()
+        df.queryExecution.toRdd.count()
         passes(name) :+= ((start, (System.nanoTime() - t0) / 1e9))
         BenchProbe.drain().get(name).foreach { sec =>
           dataSecs(name) = dataSecs.getOrElse(name, Vector.empty) :+ sec

@@ -35,61 +35,15 @@ object Profile {
     spark.range(1L << 20).selectExpr("sum(id)").collect()
     Tables.all.foreach(t => Tables(spark, sfDir, t).limit(1).count())
 
-    // ablation suffixes -> the conf override each applies; suffixes are
-    // parsed in a LOOP so they combine (`q!nowiden!spcores`), and each
-    // override SAVES the session's prior value (set or unset) and
-    // restores exactly that — a hard-coded restore would clobber
-    // whatever the session had before profiling
-    def overrideOf(suffix: String): Option[Seq[(String, String)]] = suffix match {
-      case "noaqe" => Some(Seq("spark.sql.adaptive.enabled" -> "false"))
-      case "nowsc" => Some(Seq("spark.sql.codegen.wholeStage" -> "false"))
-      case "nowiden" => Some(Seq("spark.graft.scaleout.widen" -> "false"))
-      case "spcores" => Some(Seq("spark.graft.stream.statePartitions" ->
-        spark.sparkContext.defaultParallelism.toString))
-      case "noprobelocal" => Some(Seq("spark.graft.ann.probeLocal" -> "false"))
-      // RocksDB state store + join stateFormatVersion 3 (virtual column
-      // families: ONE store per partition instead of 4 for a
-      // stream-stream join) — the A/B for the loadedProviders lock toll
-      case "rocksdb" => Some(Seq(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        "spark.sql.streaming.join.stateFormatVersion" -> "3"))
-      // restore the default (HDFS-backed) join state store — the A/B
-      // arm against StreamScale.joinStoreConf's RocksDB default
-      case "norocksjoin" => Some(Seq(
-        "spark.graft.stream.rocksdbJoin" -> "false"))
-      case _ => None
-    }
     val names = if (args.nonEmpty) args.toSeq else Queries.headline
     val rows = mutable.ArrayBuffer.empty[(String, Double, Int, Int, Int, Double)]
-    names.foreach { rawName =>
+    names.foreach { name =>
       // deterministic drain: all queued listener events from the previous
       // query are delivered before this query's counters reset
       org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext, 10000)
-      var name = rawName
-      var overrides = List.empty[(String, String)]
-      var more = true
-      while (more) {
-        val cut = name.lastIndexOf('!')
-        val ov = if (cut < 0) None else overrideOf(name.substring(cut + 1))
-        ov match {
-          case Some(kvs) =>
-            overrides :::= kvs.toList; name = name.substring(0, cut)
-          case None => more = false
-        }
-      }
-      val saved = overrides.map { case (k, v) =>
-        val prev = spark.conf.getOption(k)
-        spark.conf.set(k, v)
-        k -> prev
-      }
       jobs = 0; stages = 0; tasks = 0; taskMs = 0L
       val t0 = System.nanoTime()
-      try Queries.all(name)(spark, sfDir).queryExecution.toRdd.count()
-      finally saved.foreach {
-        case (k, Some(prev)) => spark.conf.set(k, prev)
-        case (k, None) => spark.conf.unset(k)
-      }
+      Queries.all(name)(spark, sfDir).queryExecution.toRdd.count()
       val wall = (System.nanoTime() - t0) / 1e9
       org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext, 10000)
       rows += ((name, wall, jobs, stages, tasks, taskMs / 1e3))

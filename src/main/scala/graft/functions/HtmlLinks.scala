@@ -61,11 +61,6 @@ object HtmlLinks {
     org.apache.spark.sql.GraftBridge.column(
       HtmlAnchorsExpr(org.apache.spark.sql.GraftBridge.expression(html)))
 
-  /** `struct<canonical, noindex>` per page ([[pageMeta]] contract). */
-  def htmlPageMeta(html: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      HtmlPageMetaExpr(org.apache.spark.sql.GraftBridge.expression(html)))
-
   /** Decode character references in an attribute value —
     * [[HtmlExtract.charRef]]'s rules verbatim (one shared decoder, so
     * the text and link scanners cannot drift).

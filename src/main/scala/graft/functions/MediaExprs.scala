@@ -4,53 +4,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types._
 
-/** `gif_stats(payload)` → struct<width, height, channels, px_sum,
-  * px_chk> or NULL — the [[graft.operators.Multimodal.extractGifFeatures]]
-  * contract as a native Catalyst expression. This exists as the
-  * measured ALTERNATIVE to the multimodal tier's `mapPartitions`
-  * extractors (the r9–r11 review item): one representative stateful
-  * binary decode (LZW + palette + deinterlace) wrapped the
-  * `BpeEncodeExpr` way, so the two execution shapes can be benchmarked
-  * against each other on identical payloads and the choice recorded
-  * with numbers instead of carried as an open question
-  * ([[graft.MultimodalProfile]]; decision + figures in
-  * `Multimodal.scala`'s header). Undecodable payloads evaluate to
-  * NULL — the same per-row error contract as the extractor.
-  */
-case class GifStatsExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("px_sum", LongType, nullable = false),
-    StructField("px_chk", LongType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "gif_stats"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    TextExprTypes.expect(prettyName, "a binary payload",
-      (child.dataType.catalogString, child.dataType == BinaryType))
-
-  override protected def nullSafeEval(input: Any): Any =
-    try {
-      val img = graft.operators.GifCodec.decodeGif(
-        input.asInstanceOf[Array[Byte]])
-      var sum = 0L; var chk = 0L; var i = 0
-      while (i < img.pixels.length) {
-        val v = img.pixels(i) & 0xff
-        sum += v; chk += (v + 1L) * (i + 1L)
-        i += 1
-      }
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](img.width, img.height, img.channels, sum, chk))
-    } catch { case scala.util.control.NonFatal(_) => null }
-
-  override protected def withNewChildInternal(newChild: Expression): GifStatsExpr =
-    copy(child = newChild)
-}
-
 /** `warc_parse(record_bytes)` → struct<warc_type, target_uri, status,
   * content_type, location, body, coding_err, record_id, warc_date,
   * refers_to, refers_to_uri, payload_digest> or NULL — one WARC record

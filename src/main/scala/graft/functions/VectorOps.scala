@@ -25,12 +25,6 @@ object VectorOps {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Signature bits for one table of random-hyperplane LSH (see
-    * [[hyperplaneBuckets]] for the all-tables single-pass form).
-    */
-  def hyperplaneBits(v: Column, planes: Seq[Array[Double]]): Column =
-    hyperplaneBuckets(v, Seq(planes)).getItem(0)
-
   /** Per-table LSH bucket ids (array of longs, one per table) in a single
     * pass over the vector. The plane tensor is tiny (tables × bits × dim
     * doubles) and ships inside the expression — bucketing stays a pure,

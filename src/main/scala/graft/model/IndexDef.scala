@@ -46,9 +46,7 @@ final case class IndexDef(
     isArrayIndex: Boolean = false,
     immutable: Boolean = false,
     retainDeletedXattr: Boolean = false,
-    partition: PartitionSpec = SinglePartition) {
-  def hasDescending: Boolean = desc.contains(true)
-}
+    partition: PartitionSpec = SinglePartition)
 
 object IndexDef {
 

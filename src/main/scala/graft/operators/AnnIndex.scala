@@ -786,10 +786,7 @@ object AnnIndex {
     //    version and its [[compact]] fold) pays ONE routing job.
     //  - batch probes (corpus-scale queries): collecting is forbidden —
     //    keep the shared lazy checkpoint + distinct collect.
-    // A/B + operational kill-switch for the local-relation fast path
-    val localOk = spark.conf.getOption("spark.graft.ann.probeLocal")
-      .forall(_.toBoolean)
-    if (broadcastQ && localOk)
+    if (broadcastQ)
       probeRouted(spark, dir, routeQueries(spark, dir, queries, nprobe, v),
         corpus, k, rerank, idCol, vecCol, v, allowed, excluded, asOfBatch)
     else {

@@ -66,8 +66,12 @@ object IndexBuilder {
     entries
   }
 
-  /** Declarative path: key columns straight from expressions (O3). */
-  private def project(df: DataFrame, keyCols: Seq[Column], docid: Column,
+  /** Declarative path: key columns straight from expressions (O3). The
+    * ONE key-derivation rule — array explode, `key`/`keyN` naming and the
+    * all-null filter — shared by the batch build, the incremental merge
+    * ([[IndexMaintainer.merge]]) and the streaming store's empty frame.
+    */
+  private[graft] def project(df: DataFrame, keyCols: Seq[Column], docid: Column,
                       defn: IndexDef): DataFrame = {
     if (defn.isArrayIndex) {
       // Array index: one entry per element of the (single) array key (O12).

@@ -97,21 +97,8 @@ object IndexMaintainer {
       else {
         require(defn.secExprs.nonEmpty,
           s"index ${defn.name}: non-primary merge needs secExprs")
-        if (defn.isArrayIndex) {
-          // one entry per array element (O12) — array indexes are
-          // maintained on the MAINT stream like any other
-          require(defn.secExprs.length == 1,
-            "array index takes one array-valued key")
-          surviving.select(explode(expr(defn.secExprs.head)).as("key"),
-              col("docid"))
-            .filter(col("key").isNotNull)
-        } else {
-          val keyCols = defn.secExprs.zip(IndexBuilder.keyNames(defn.secExprs.length))
-            .map { case (e, n) => expr(e).as(n) }
-          surviving.select(keyCols :+ col("docid").as("docid"): _*)
-            .filter(IndexBuilder.keyNames(defn.secExprs.length)
-              .map(col(_).isNotNull).reduce(_ || _))
-        }
+        IndexBuilder.project(surviving, defn.secExprs.map(expr),
+          col("docid").as("docid"), defn)
       }
 
     if (defn.immutable) {

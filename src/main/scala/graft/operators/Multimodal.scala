@@ -23,24 +23,13 @@ import org.apache.spark.sql.types._
   * a native codec for the remaining formats (JPEG entropy decode, GIF
   * LZW) would slot in unchanged.
   *
-  * EXECUTION-SHAPE DECISION (closes the r9–r11 review item, with
-  * numbers): the `mapPartitions` shape here was measured against the
-  * native-expression alternative ([[graft.functions.GifStatsExpr]] —
-  * the `BpeEncodeExpr` recipe applied to the representative stateful
-  * binary decode, LZW + palette + deinterlace) on the identical
-  * planted corpus via [[graft.MultimodalProfile]]: sf0.1 (5 000
-  * payloads), local[32], interleaved passes — run 1 mins 0.211 s
-  * (mapPartitions) vs 0.178 s (expression); run 2 mins 0.148 s vs
-  * 0.166 s. The winner flips between runs and the pass distributions
-  * overlap entirely: the row-conversion boundary is NOISE next to the
-  * decode work (≲ 6 µs/row either way — both shapes break whole-stage
-  * codegen identically, one via the iterator boundary, one via
-  * `CodegenFallback`). Decision: the extractors KEEP `mapPartitions`
-  * — it supports passthrough columns and per-task decoder init that
-  * the expression shape would re-plumb for no measured gain — and
-  * `GifStatsExpr` stays as the proven, spec-pinned recipe for any
-  * future single-payload scalar extractor where expression composition
-  * (e.g. inside SQL) is worth more than passthrough.
+  * EXECUTION SHAPE: the extractors keep `mapPartitions` rather than a
+  * native Catalyst expression per payload. Measured on one planted GIF
+  * corpus (sf0.1, 5 000 payloads, local[32], interleaved passes), the
+  * two shapes traded wins between runs (0.211 vs 0.178 s, then 0.148 vs
+  * 0.166 s) — the row-conversion boundary is noise next to the decode
+  * work, and `mapPartitions` keeps passthrough columns and per-task
+  * decoder init.
   */
 object Multimodal {
 

@@ -35,11 +35,6 @@ object ScaleOut {
     * oracles, deterministic tie-breaks).
     */
   def widen(df: DataFrame): DataFrame = {
-    // operational kill-switch (also the A/B instrument): widening is a
-    // plan change, and a deployment that wants the unwidened plan back
-    // should not need a rebuild
-    val enabled = df.sparkSession.conf
-      .getOption("spark.graft.scaleout.widen").forall(_.toBoolean)
     val cores = df.sparkSession.sparkContext.defaultParallelism
     // SCAN-ROOT-ONLY, enforced: the partition probe below builds the
     // frame's physical RDD, and under AQE a frame containing an
@@ -48,14 +43,14 @@ object ScaleOut {
     // For a scan-rooted frame (leaf + narrow row ops — every call site)
     // the probe is metadata-only: it reads the file-split count, runs
     // no job. Anything wider skips widening instead of paying that.
-    if (enabled && scanRooted(df) && df.rdd.getNumPartitions * 2 < cores)
+    if (scanRooted(df) && df.rdd.getNumPartitions * 2 < cores)
       df.repartition(cores)
     else df
   }
 
   /** True when `df` is a leaf scan under narrow per-row operators only
-    * (project/filter/alias/local limits) — the shapes whose RDD
-    * construction cannot trigger stage execution.
+    * (project/filter/subquery alias) — the shapes whose RDD construction
+    * cannot trigger stage execution.
     */
   private def scanRooted(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical._

@@ -364,7 +364,7 @@ private[graft] trait IndexQueries extends QueryBase {
     // stream-stream join: RocksDB + virtual-column-family state (ONE
     // store per partition instead of four — StreamScale.joinStoreConf)
     val q = graft.streaming.StreamScale.runDrainedConf(s,
-      graft.streaming.StreamScale.joinStoreConf(s)) {
+      graft.streaming.StreamScale.joinStoreConf) {
       graft.streaming.EventWindows.intervalJoinStream(stream)
       .writeStream.outputMode("append").format("memory")
       .queryName("graft_events_join_stream")

@@ -51,13 +51,6 @@ object DocSources {
   def jsonField(doc: Column, path: String): Column =
     get_json_object(doc, s"$$.$path")
 
-  /** Parse a raw JSON doc column into a typed struct (errors → null row —
-    * the engine's panic-safe eval analog, reference
-    * `Projector/indexjs.go:77-81`).
-    */
-  def parseDocs(raw: DataFrame, docCol: String, schema: StructType): DataFrame =
-    raw.withColumn("__doc", from_json(col(docCol), schema))
-
   /** A change feed from a raw JSON mutation log: each line
     * `{"opcode": "...", "docid": ..., "seqno": ..., "value": {...doc...}}`.
     * Produces the engine change-event schema (SURVEY §1.1 O1).

@@ -27,18 +27,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * size — a bigger cluster gets proportionally more state partitions,
   * so per-partition state volume keeps shrinking at scale — while
   * dividing the fixed per-partition-per-batch registry/commit/
-  * maintenance toll by 4. Override via
-  * `spark.graft.stream.statePartitions` for deployments whose state
-  * volume, not their core count, should set the figure (the knob the
-  * checkpoint pins thereafter).
+  * maintenance toll by 4.
   */
 object StreamScale {
 
-  def statePartitions(spark: SparkSession): Int = {
-    val cores = spark.sparkContext.defaultParallelism
-    spark.conf.getOption("spark.graft.stream.statePartitions")
-      .map(_.toInt).getOrElse(math.max(4, cores / 4))
-  }
+  def statePartitions(spark: SparkSession): Int =
+    math.max(4, spark.sparkContext.defaultParallelism / 4)
 
   /** Start and fully drain a (Trigger.AvailableNow) streaming query
     * under the streaming state-partition rule, then restore the batch
@@ -98,18 +92,13 @@ object StreamScale {
     * win grows with partition count, i.e. with cluster size. Composes
     * WITH the cores/4 rule, not instead of it.
     *
-    * Kill-switch: `spark.graft.stream.rocksdbJoin=false` restores the
-    * default backend. Applied per stream (the other stateful streams
-    * carry ONE store per partition, where the HDFS backend measured
-    * neutral-to-better — `events_stream_dedup` 1.43 vs 1.83 warm).
+    * Applied per stream: the other stateful streams carry ONE store per
+    * partition, where the HDFS backend measured neutral-to-better
+    * (`events_stream_dedup` 1.43 vs 1.83 s warm).
     */
-  def joinStoreConf(spark: SparkSession): Seq[(String, String)] =
-    if (spark.conf.getOption("spark.graft.stream.rocksdbJoin")
-        .forall(_.toBoolean))
-      Seq(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          ("org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider"),
-        "spark.sql.streaming.join.stateFormatVersion" -> "3")
-    else Nil
+  val joinStoreConf: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      ("org.apache.spark.sql.execution.streaming.state." +
+        "RocksDBStateStoreProvider"),
+    "spark.sql.streaming.join.stateFormatVersion" -> "3")
 }

@@ -6,8 +6,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery, Trigger}
 
+import graft.functions.VersionedSlots
 import graft.model.{ChangeEvent, IndexDef, Opcode}
-import graft.operators.IndexMaintainer
+import graft.operators.{IndexBuilder, IndexMaintainer}
 
 /** Streaming index maintenance — the MAINT_STREAM/topic machinery of the
   * reference (stream lifecycle O17, failover/rollback O18/O19) re-expressed
@@ -23,17 +24,14 @@ import graft.operators.IndexMaintainer
   *    Exactly-once across restarts because the write is idempotent per
   *    `batchId` (retry of batch N rewrites `v=N`, never appends — the
   *    requirement called out in SURVEY §7.4.4).
-  *  - [[deltaStream]]: typed `flatMapGroupsWithState` keeping the
-  *    docid → last-emitted-key back-index and emitting retraction/upsert
+  *  - [[deltaStreamKeyed]]: typed `flatMapGroupsWithState` keeping the
+  *    docid → last-emitted-keys back-index and emitting retraction/upsert
   *    deltas — the reference's per-mutation old-key/new-key routing
   *    (`Projector/indexjs.go:103-189`) as managed Spark state, solving the
   *    "source carries no oldValue" problem (SURVEY §7.4.1) without the
   *    reference's delete-broadcast.
   */
 object StreamingIndex {
-
-  /** An index entry change: op = +1 upsert, -1 retraction. */
-  final case class IndexDelta(docid: Long, op: Int, key: Double)
 
   /** Docid-hash partition count of the persisted index layout. On a real
     * cluster this scales with index size (partitions sized to executor
@@ -53,21 +51,22 @@ object StreamingIndex {
     * part ids, so stale entries in the old partitions would never be
     * read or anti-joined away — silent duplicate/stale results. (To
     * actually re-partition, rebuild into a fresh directory.)
+    *
+    * The first-writer claim is an exclusive publish, so of several
+    * maintainers starting together exactly one count is recorded; a
+    * loser re-reads the winner's count and validates against it.
     */
   private def pinLayout(indexDir: String, nPartitions: Int): Unit = {
-    val p = java.nio.file.Paths.get(indexDir, "_LAYOUT")
-    if (java.nio.file.Files.exists(p)) {
-      val stored = new String(
-        java.nio.file.Files.readAllBytes(p), "UTF-8").trim.toInt
-      require(stored == nPartitions,
-        s"index $indexDir is laid out with nPartitions=$stored but the " +
-          s"caller passed $nPartitions — a mismatched maintainer would " +
-          "strand stale entries in partitions it never reads; rebuild " +
-          "into a fresh directory to change the layout")
-    } else {
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, nPartitions.toString.getBytes("UTF-8"))
-    }
+    val p = Paths.get(indexDir, "_LAYOUT")
+    Files.createDirectories(p.getParent)
+    if (!Files.exists(p) &&
+        VersionedSlots.publishExclusive(p, nPartitions.toString)) return
+    val stored = new String(Files.readAllBytes(p), "UTF-8").trim.toInt
+    require(stored == nPartitions,
+      s"index $indexDir is laid out with nPartitions=$stored but the " +
+        s"caller passed $nPartitions — a mismatched maintainer would " +
+        "strand stale entries in partitions it never reads; rebuild " +
+        "into a fresh directory to change the layout")
   }
 
   /** Start a streaming maintenance query over a docid-hash-partitioned
@@ -92,20 +91,9 @@ object StreamingIndex {
   def maintain(changes: DataFrame, defn: IndexDef, indexDir: String,
                checkpointDir: String,
                trigger: Trigger = Trigger.AvailableNow(),
-               nPartitions: Int = DefaultIndexPartitions): StreamingQuery = {
-    pinLayout(indexDir, nPartitions)
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // cache: the batch source is scanned by both the touched-partition
-        // probe and the merge itself
-        batch.persist()
-        try mergeBatch(batch, batchId, defn, indexDir, nPartitions)
-        finally batch.unpersist()
-      }
-      .start()
-  }
+               nPartitions: Int = DefaultIndexPartitions): StreamingQuery =
+    maintainAllFrom(changes, Seq((defn, indexDir, Long.MinValue)),
+      checkpointDir, trigger, nPartitions)
 
   /** One micro-batch of partitioned incremental maintenance: read ONLY the
     * partitions containing the batch's docids (at their respective latest
@@ -152,13 +140,9 @@ object StreamingIndex {
     * retry rewrites the whole directory.
     */
   private def writeManifest(indexDir: String, version: Long,
-                            parts: Seq[Int]): Unit = {
-    val tmp = Paths.get(s"$indexDir/v=$version/_parts.tmp")
-    Files.write(tmp, parts.mkString("\n").getBytes("UTF-8"))
-    Files.move(tmp, Paths.get(s"$indexDir/v=$version/_parts"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+                            parts: Seq[Int]): Unit =
+    VersionedSlots.publishReplace(Paths.get(s"$indexDir/v=$version/_parts"),
+      parts.mkString("\n"))
 
   /** Maintain MANY indexes from ONE stream pass — the reference's topic
     * topology (one projector feed drives an evaluator ENGINE MAP, one entry
@@ -192,7 +176,6 @@ object StreamingIndex {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
         batch.persist()
         // Attempt every index (one bad index doesn't stop the others'
         // writes) but FAIL the batch if any failed: the checkpoint must not
@@ -232,7 +215,7 @@ object StreamingIndex {
     pinLayout(indexDir, nPartitions)
     // buildEntries: the docid-hash repartition below IS this store's
     // layout — build's own sortAndPartition pass would be discarded
-    graft.operators.IndexBuilder.buildEntries(snapshot, defn)
+    IndexBuilder.buildEntries(snapshot, defn)
       .withColumn("part", partExpr(nPartitions))
       .repartition(col("part"))
       .write.mode("overwrite").partitionBy("part")
@@ -300,14 +283,8 @@ object StreamingIndex {
     */
   private def emptyFrom(proto: DataFrame, defn: IndexDef): DataFrame =
     if (defn.isPrimary) proto.select(col("docid"))
-    else if (defn.isArrayIndex)
-      proto.select(explode(expr(defn.secExprs.head)).as("key"), col("docid"))
-    else {
-      val keyCols = defn.secExprs.zip(
-        graft.operators.IndexBuilder.keyNames(defn.secExprs.length))
-        .map { case (e, n) => expr(e).as(n) }
-      proto.select(keyCols :+ col("docid"): _*)
-    }
+    else IndexBuilder.project(proto, defn.secExprs.map(expr), col("docid"),
+      defn)
 
   /** partition id → latest committed version (strictly below `beforeBatch`)
     * that declares it. Driver-side directory listing, O(versions) — on a
@@ -431,8 +408,7 @@ object StreamingIndex {
     */
   final case class KeyedDelta(docid: Long, op: Int, key: Array[Byte])
 
-  /** Generalized stateful delta stream — [[deltaStream]] for ARBITRARY key
-    * shapes. `emit` computes the index keys a change event's document maps
+  /** Stateful delta stream for ARBITRARY key shapes. `emit` computes the index keys a change event's document maps
     * to (empty = WHERE-filtered or deleted; several = multi-emit, the
     * reference's `emit()` called more than once per doc). The
     * docid → key-set back-index is held in `GroupState` as the
@@ -481,42 +457,6 @@ object StreamingIndex {
           if (cur.isEmpty) state.remove()
           else state.update(cur.iterator.map(_.toArray).toSeq)
           out.result().iterator
-        })
-  }
-
-  /** Typed stateful form: docid-grouped change events → index deltas, with
-    * the docid → last-key back-index held in `GroupState`. Emits a
-    * retraction for the previous key (if any) and an upsert for the new
-    * one. The single-`Double`-key fast path of [[deltaStreamKeyed]].
-    */
-  def deltaStream(spark: SparkSession,
-                  changes: org.apache.spark.sql.Dataset[ChangeEvent],
-                  whereMin: Option[Double] = None)
-      : org.apache.spark.sql.Dataset[IndexDelta] = {
-    import spark.implicits._
-    changes.groupByKey(_.docid)
-      .flatMapGroupsWithState[Double, IndexDelta](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout())(
-        (docid: Long, events: Iterator[ChangeEvent], state: GroupState[Double]) => {
-          var deltas = List.empty[IndexDelta]
-          events.toSeq.sortBy(_.seqno).foreach { ev =>
-            val newKey: Option[Double] = ev.opcode match {
-              case Opcode.Mutation =>
-                ev.value.filter(v => whereMin.forall(v >= _))
-              case _ => None // DELETION / EXPIRATION
-            }
-            val oldKey = if (state.exists) Some(state.get) else None
-            if (oldKey != newKey) {
-              oldKey.foreach(k => deltas ::= IndexDelta(docid, -1, k))
-              newKey.foreach(k => deltas ::= IndexDelta(docid, 1, k))
-              newKey match {
-                case Some(k) => state.update(k)
-                case None => state.remove()
-              }
-            }
-          }
-          deltas.reverseIterator
         })
   }
 }

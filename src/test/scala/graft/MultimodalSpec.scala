@@ -304,26 +304,6 @@ class MultimodalSpec extends SparkSpec {
       box("stss", be32(0) ++ be32(9))), "truncated stss")
   }
 
-  test("GifStatsExpr (expression shape) == extractGifFeatures " +
-      "(mapPartitions shape) row-for-row, nulls included") {
-    val media = Queries.plantedGifMedia(spark, sf())
-    val viaMp = Multimodal.extractGifFeatures(media)
-      .orderBy("media_id").collect()
-    val stats = org.apache.spark.sql.GraftBridge.column(
-      graft.functions.GifStatsExpr(
-        org.apache.spark.sql.GraftBridge.expression(col("payload"))))
-    val viaEx = media.select(col("media_id"), stats.as("s"))
-      .select(col("media_id"), col("s.width"), col("s.height"),
-        col("s.channels"), col("s.px_sum"), col("s.px_chk"))
-      .orderBy("media_id").collect()
-    assert(viaMp.length == viaEx.length && viaMp.length > 0)
-    viaMp.zip(viaEx).foreach { case (a, b) =>
-      assert(a.toSeq == b.toSeq, s"media ${a.get(0)}")
-    }
-    // the garbage kind nulls through both shapes
-    assert(viaMp.exists(_.isNullAt(1)))
-  }
-
   test("extractEmbeddings sniffs TIFF (II/MM) and embeds it identically " +
       "to the same raster as PNG") {
     import graft.operators.{PixelCodec, TiffCodec}

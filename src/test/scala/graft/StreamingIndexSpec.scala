@@ -112,27 +112,39 @@ class StreamingIndexSpec extends SparkSpec {
       .contains(1L))
   }
 
+  /** A key as [[StreamingIndex.KeyedDelta]] carries it: the collation
+    * encoding of the emitted values.
+    */
+  private def enc(k: Any*) =
+    graft.functions.JsonCollation.encode(org.apache.spark.sql.Row(k: _*)).toSeq
+
+  /** The single-key emit of [[defn]]: `value`, or nothing when the event is
+    * a deletion or fails `value >= 0`.
+    */
+  private val whereEmit: ChangeEvent => Seq[Seq[Any]] = e =>
+    e.value.filter(_ >= 0).map(v => Seq[Any](v)).toSeq
+
   test("deltaStream emits retraction + upsert on key change (batch mode)") {
     val changes = Seq(
       ev(Opcode.Mutation, 1L, 5.0, 1L),
       ev(Opcode.Mutation, 1L, 8.0, 2L),
-      ev(Opcode.Mutation, 2L, -1.0, 3L), // filtered by whereMin
+      ev(Opcode.Mutation, 2L, -1.0, 3L), // filtered by WHERE
       ev(Opcode.Mutation, 3L, 2.0, 4L),
       ev(Opcode.Deletion, 3L, null, 5L)).toDS()
-    val deltas = StreamingIndex.deltaStream(spark, changes, whereMin = Some(0.0))
+    val deltas = StreamingIndex.deltaStreamKeyed(spark, changes, whereEmit)
       .collect().toSeq
-    val net = deltas.groupBy(d => (d.docid, d.key))
+    val net = deltas.groupBy(d => (d.docid, d.key.toSeq))
       .view.mapValues(_.map(_.op).sum).filter(_._2 != 0).keys.toSet
-    assert(net == Set((1L, 8.0))) // 5.0 retracted, 8.0 stands; doc3 net zero
+    assert(net == Set((1L, enc(8.0)))) // 5.0 retracted, 8.0 stands; doc3 net zero
     // ordering within docid 1: +5, -5, +8
-    val d1 = deltas.filter(_.docid == 1L).map(d => (d.op, d.key))
-    assert(d1 == Seq((1, 5.0), (-1, 5.0), (1, 8.0)))
+    val d1 = deltas.filter(_.docid == 1L).map(d => (d.op, d.key.toSeq))
+    assert(d1 == Seq((1, enc(5.0)), (-1, enc(5.0)), (1, enc(8.0))))
   }
 
   test("deltaStream over MemoryStream micro-batches keeps state across batches") {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[ChangeEvent]
-    val q = StreamingIndex.deltaStream(spark, stream.toDS(), whereMin = Some(0.0))
+    val q = StreamingIndex.deltaStreamKeyed(spark, stream.toDS(), whereEmit)
       .writeStream.format("memory").queryName("deltas_out")
       .outputMode("append").start()
     stream.addData(ev(Opcode.Mutation, 1L, 5.0, 1L))
@@ -143,11 +155,11 @@ class StreamingIndexSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
     val deltas = spark.table("deltas_out")
-      .as[StreamingIndex.IndexDelta].collect().toSeq
+      .as[StreamingIndex.KeyedDelta].collect().toSeq
     // state (docid -> last key) must survive across micro-batches:
     // +5 | -5 +8 | -8
-    assert(deltas.map(d => (d.op, d.key)) ==
-      Seq((1, 5.0), (-1, 5.0), (1, 8.0), (-1, 8.0)))
+    assert(deltas.map(d => (d.op, d.key.toSeq)) ==
+      Seq((1, enc(5.0)), (-1, enc(5.0)), (1, enc(8.0)), (-1, enc(8.0))))
   }
 
   test("deltaStreamKeyed: composite-key delta replay == rebuild from final state") {
@@ -196,8 +208,6 @@ class StreamingIndexSpec extends SparkSpec {
     import spark.implicits._
     val deltas = spark.table("keyed_out").as[StreamingIndex.KeyedDelta]
       .collect().toSeq
-    def enc(v: Any) = graft.functions.JsonCollation
-      .encode(org.apache.spark.sql.Row(v)).toSeq
     // batch 1: +doc:1 +5.0 | batch 2: -5.0 +8.0 (constant key untouched) |
     // batch 3: -doc:1 -8.0
     val got = deltas.map(d => (d.op, d.key.toSeq))
@@ -433,6 +443,38 @@ class StreamingIndexSpec extends SparkSpec {
         .selectExpr("id as docid", "5.0 as value"), defn, indexDir,
         nPartitions = 64)
     }
+  }
+
+  test("concurrent backfills with distinct counts pin exactly one layout") {
+    val indexDir = tmp("glayrace")
+    val snapshot = spark.range(4)
+      .selectExpr("id as docid", "cast(id as double) as value")
+    val counts = 2 to 7
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val outcomes = counts.map { n =>
+      val t = new java.util.concurrent.FutureTask[Either[Throwable, Int]](
+        () => {
+          gate.await()
+          try { StreamingIndex.backfill(snapshot, defn, indexDir, n); Right(n) }
+          catch { case e: Throwable => Left(e) }
+        })
+      new Thread(t).start()
+      t
+    }
+    gate.countDown()
+    val results = outcomes.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+    val winners = results.collect { case Right(n) => n }
+    assert(winners.size == 1, s"exactly one layout may win: $results")
+    val won = winners.head
+    results.collect { case Left(e) => e }.foreach { e =>
+      assert(e.isInstanceOf[IllegalArgumentException], e.toString)
+      assert(e.getMessage.contains(s"laid out with nPartitions=$won"), e.getMessage)
+    }
+    assert(new String(Files.readAllBytes(
+      java.nio.file.Paths.get(indexDir, "_LAYOUT")), "UTF-8").trim == won.toString)
+    val entries = StreamingIndex.currentIndex(spark, indexDir, defn)
+      .select("key", "docid").as[(Double, Long)].collect().toSet
+    assert(entries == (0L until 4L).map(i => (i.toDouble, i)).toSet)
   }
 
   test("deltaStreamKeyed: a THROWING emit skips its event (keys " +
