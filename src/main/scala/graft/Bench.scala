@@ -1,11 +1,24 @@
 package graft
 
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQueryListener
+
 /** Benchmark main: runs the headline queries (Queries.headline) against
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line with per-query and total
-  * wall-clock seconds. Failed queries are excluded from the total and
-  * listed under `"failed"` — a broken query must read as breakage, not as
-  * a time. Session config comes from [[GraftSession]] (the engine's one
-  * place for scale settings).
+  * wall-clock seconds, plus per pass the scheduler counters (jobs,
+  * stages, tasks, task-seconds) and the streams' per-batch data seconds.
+  * Failed queries are excluded from the total and listed under
+  * `"failed"` — a broken query must read as breakage, not as a time.
+  * Session config comes from [[GraftSession]] (the engine's one place
+  * for scale settings).
+  *
+  * A query whose wall-clock is large but whose task time is small is
+  * paying scheduling / job-launch overhead (many tiny jobs), not
+  * compute; the fix is fewer jobs or fewer partitions, not faster
+  * expressions.
   */
 object Bench {
 
@@ -65,6 +78,139 @@ object Bench {
     (minPoisoned ++ spreadPoisoned).distinct
   }
 
+
+  /** One completed pass of one query: start offset (seconds since bench
+    * start), wall seconds, the scheduler counters of every job it ran,
+    * and — when it started a stream — the summed `addBatch` seconds of
+    * its micro-batches (the execute-the-batch phase; offset/WAL/planning
+    * overheads count as stream init, so `init ≈ wall − streamData`).
+    */
+  final case class Pass(start: Double, wall: Double, jobs: Int, stages: Int,
+                        tasks: Int, taskSec: Double,
+                        streamData: Option[Double])
+
+  /** The run's measurement harness: one [[SparkListener]] and one
+    * [[StreamingQueryListener]] registered for the session's lifetime,
+    * so the timed region runs the query and nothing else — no extra
+    * Spark action, no probe in the query body. The listener bus is
+    * drained before the counters reset and after the timed region, so
+    * every event a query caused is counted under it and no other.
+    */
+  final class Meter(spark: SparkSession) extends AutoCloseable {
+    private val jobs, stages, tasks, streams = new AtomicInteger
+    private val taskMs, addBatchMs = new AtomicLong
+
+    private val scheduler = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet()
+        tasks.addAndGet(s.stageInfo.numTasks)
+      }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration)
+    }
+    private val progress = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        streams.incrementAndGet()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        Option(e.progress.durationMs.get("addBatch"))
+          .foreach(ms => addBatchMs.addAndGet(ms.longValue))
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(scheduler)
+    spark.streams.addListener(progress)
+
+    private def drain(): Unit =
+      GraftBridge.drainListenerBus(spark.sparkContext, 10000)
+
+    /** Time `body` and read the counters of everything it ran. */
+    def measure(benchT0: Long)(body: => Unit): Pass = {
+      drain()
+      Seq(jobs, stages, tasks, streams).foreach(_.set(0))
+      Seq(taskMs, addBatchMs).foreach(_.set(0L))
+      val t0 = System.nanoTime()
+      body
+      val wall = (System.nanoTime() - t0) / 1e9
+      drain()
+      Pass((t0 - benchT0) / 1e9, wall, jobs.get, stages.get, tasks.get,
+        taskMs.get / 1e3,
+        if (streams.get > 0) Some(addBatchMs.get / 1e3) else None)
+    }
+
+    def close(): Unit = {
+      spark.sparkContext.removeSparkListener(scheduler)
+      spark.streams.removeListener(progress)
+    }
+  }
+
+  /** The artifact: the full JSON line and the short totals line. A query
+    * counts as good when all `runs` passes completed; per-query maps and
+    * per-pass arrays cover the good queries, `stream_data` every
+    * completed pass that started a stream.
+    */
+  def artifact(results: Seq[(String, Seq[Pass])], runs: Int,
+               sfDir: String): (String, String) = {
+    val good = results.filter(_._2.length == runs)
+    val failed = results.filterNot(_._2.length == runs).map(_._1)
+    def fmtMap(f: Seq[Double] => Double): String =
+      good.map { case (k, ps) => "\"" + k + "\":" + f(ps.map(_.wall)) }
+        .mkString("{", ",", "}")
+    // Double.toString, not an f-interpolator: %f is locale-sensitive
+    // (comma decimals under e.g. a German default locale = broken JSON)
+    def round(v: Double, decimals: Int): String = {
+      val scale = math.pow(10, decimals)
+      (math.round(v * scale) / scale).toString
+    }
+    def fmtArrays(rows: Seq[(String, Seq[String])]): String =
+      rows.map { case (k, vs) =>
+        "\"" + k + "\":" + vs.mkString("[", ",", "]")
+      }.mkString("{", ",", "}")
+    def perPass(f: Pass => String): String =
+      fmtArrays(good.map { case (k, ps) => k -> ps.map(f) })
+    val qs = fmtMap(_.min)
+    val spread = fmtMap(ws => ws.max - ws.min)
+    // per-pass start offsets AND per-pass durations: a reader can overlay
+    // the two, spot a contended wall-clock window (several queries slow in
+    // the same region of ONE pass), and reconstruct the clean number
+    // without a re-run — the artifact arbitrates itself
+    val starts = perPass(p => round(p.start, 1))
+    val passesJson = perPass(p => round(p.wall, 3))
+    // streaming queries' measured per-batch data seconds, per pass:
+    // init ≈ passes[q][i] − stream_data[q][i], so a regression in the
+    // actual join/maintenance work is visible under the constant
+    // stream-standup term
+    val streamDataJson = fmtArrays(results
+      .map { case (k, ps) => k -> ps.flatMap(_.streamData).map(round(_, 3)) }
+      .filter(_._2.nonEmpty))
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // queries whose numbers are noise-poisoned (min in a contended
+    // region, or a >3x non-first pass): upper bounds — read clean
+    // values off "passes". Computed ONCE; the run-level flag derives
+    // from the same list so the two can never disagree.
+    val contended = contendedQueries(good.map { case (k, ps) =>
+      k -> ps.map(p => (p.start, p.wall)) })
+    val contendedJson = contended.map("\"" + _ + "\"")
+      .mkString("[", ",", "]")
+    val total = good.map(_._2.map(_.wall).min).sum
+    // the round-1..3 headline subset, for like-for-like cross-round compare
+    val legacy = good.filter(r => Queries.headlineLegacy.contains(r._1))
+      .map(_._2.map(_.wall).min).sum
+    val contendedRun = contended.size >= 3
+    // scheduler counters per pass, aligned with "passes"
+    val jobs = perPass(_.jobs.toString)
+    val stages = perPass(_.stages.toString)
+    val tasks = perPass(_.tasks.toString)
+    val taskS = perPass(p => round(p.taskSec, 3))
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","legacy_total":$legacy,"method":"interleaved-min-of-$runs","queries":$qs,"spread":$spread,"starts":$starts,"passes":$passesJson,"stream_data":$streamDataJson,"contended":$contendedJson,"contended_run":$contendedRun,"failed":$failedJson,"sf":"$sfDir","jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_s":$taskS}"""
+    // totals-last: a second, short line re-stating only the headline
+    // numbers, so a capture window that truncates the (long) full line
+    // above still records what the round is graded on
+    val tailLine = s"""{"metric":"totals_tail","total":$total,"legacy_total":$legacy,"contended":$contendedJson,"contended_run":$contendedRun,"failed":$failedJson,"sf":"$sfDir"}"""
+    (fullLine, tailLine)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -94,87 +240,28 @@ object Bench {
     // in the artifact itself. min-of-N also stays the steadier
     // steady-state estimate: pass 1 absorbs first-use JIT/codegen for
     // plans unique to a query.
-    val trace = sys.env.contains("SPARK_GRAFT_BENCH_TRACE")
+    //
     // 3 passes by default: with the full per-pass duration arrays emitted
-    // under "passes" (below), one contention-polluted pass is identifiable
-    // AND discountable from the artifact alone — min-of-3 still reports a
+    // under "passes", one contention-polluted pass is identifiable AND
+    // discountable from the artifact alone — min-of-3 still reports a
     // clean number when any single wall-clock region was contended
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
+    val meter = new Meter(spark)
     val benchT0 = System.nanoTime()
-    // name -> (startOffsetSec, durationSec) per completed pass, in pass order
-    val passes = collection.mutable.LinkedHashMap[String, Vector[(Double, Double)]]()
+    val passes = collection.mutable.LinkedHashMap[String, Vector[Pass]]()
     Queries.headline.foreach(passes(_) = Vector.empty)
-    // streaming queries report their measured per-batch DATA seconds via
-    // BenchProbe — collected per pass so the artifact can separate the
-    // (near-constant) stream-init term from the work that scales
-    val dataSecs = collection.mutable.LinkedHashMap[String, Vector[Double]]()
     for (pass <- 1 to runs; name <- Queries.headline) {
-      if (trace) System.err.println(s"[bench-trace] pass $pass start $name")
-      BenchProbe.drain() // a failed prior query must not leak its probe
-      val start = (System.nanoTime() - benchT0) / 1e9
-      val t0 = System.nanoTime()
-      try {
-        val df = Queries.all(name)(spark, sfDir)
-        df.queryExecution.toRdd.count()
-        passes(name) :+= ((start, (System.nanoTime() - t0) / 1e9))
-        BenchProbe.drain().get(name).foreach { sec =>
-          dataSecs(name) = dataSecs.getOrElse(name, Vector.empty) :+ sec
-        }
-      } catch {
+      System.err.println(s"[bench] pass $pass start $name")
+      try passes(name) :+= meter.measure(benchT0) {
+        Queries.all(name)(spark, sfDir).queryExecution.toRdd.count()
+      }
+      catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name (pass $pass): ${e.getMessage}")
       }
     }
-    val results = passes.toVector
-    val good = results.filter(_._2.length == runs)
-    val failed = results.filterNot(_._2.length == runs).map(_._1)
-    def fmtMap(f: Vector[(Double, Double)] => Double): String =
-      good.map { case (k, ps) => "\"" + k + "\":" + f(ps) }.mkString("{", ",", "}")
-    val qs = fmtMap(_.map(_._2).min)
-    val spread = fmtMap(ps => ps.map(_._2).max - ps.map(_._2).min)
-    // Double.toString, not an f-interpolator: %f is locale-sensitive
-    // (comma decimals under e.g. a German default locale = broken JSON)
-    def fmtArrays(f: (Double, Double) => Double, decimals: Int): String = {
-      val scale = math.pow(10, decimals)
-      good.map { case (k, ps) =>
-        "\"" + k + "\":" +
-          ps.map(p => (math.round(f(p._1, p._2) * scale) / scale).toString)
-            .mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-    }
-    // per-pass start offsets AND per-pass durations: a reader can overlay
-    // the two, spot a contended wall-clock window (several queries slow in
-    // the same region of ONE pass), and reconstruct the clean number
-    // without a re-run — the artifact arbitrates itself
-    val starts = fmtArrays((s, _) => s, 1)
-    val passesJson = fmtArrays((_, dur) => dur, 3)
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // queries whose numbers are noise-poisoned (min in a contended
-    // region, or a >3x non-first pass): upper bounds — read clean
-    // values off "passes". Computed ONCE; the run-level flag derives
-    // from the same list so the two can never disagree.
-    val contended = contendedQueries(good)
-    val contendedJson = contended.map("\"" + _ + "\"")
-      .mkString("[", ",", "]")
-    // streaming queries' measured per-batch data seconds, per pass:
-    // init ≈ passes[q][i] − stream_data[q][i], so a regression in the
-    // actual join/maintenance work is visible under the constant
-    // stream-standup term
-    val streamDataJson = dataSecs.map { case (k, vs) =>
-      "\"" + k + "\":" +
-        vs.map(v => (math.round(v * 1000) / 1000.0).toString)
-          .mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val total = good.map(_._2.map(_._2).min).sum
-    // the round-1..3 headline subset, for like-for-like cross-round compare
-    val legacy = good.filter(r => Queries.headlineLegacy.contains(r._1))
-      .map(_._2.map(_._2).min).sum
-    val contendedRun = contended.size >= 3
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","legacy_total":$legacy,"method":"interleaved-min-of-$runs","queries":$qs,"spread":$spread,"starts":$starts,"passes":$passesJson,"stream_data":$streamDataJson,"contended":$contendedJson,"contended_run":$contendedRun,"failed":$failedJson,"sf":"$sfDir"}"""
-    // totals-last: a second, short line re-stating only the headline
-    // numbers, so a capture window that truncates the (long) full line
-    // above still records what the round is graded on
-    val tailLine = s"""{"metric":"totals_tail","total":$total,"legacy_total":$legacy,"contended":$contendedJson,"contended_run":$contendedRun,"failed":$failedJson,"sf":"$sfDir"}"""
+    meter.close()
+    val (fullLine, tailLine) = artifact(passes.toVector, runs, sfDir)
     // persist the COMPLETE artifact to a file first: the driver's stdout
     // capture window has truncated ~40% of per-query numbers in past
     // rounds — the file is the lossless record (committed with the repo)

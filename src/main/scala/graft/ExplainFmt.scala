@@ -4,9 +4,8 @@ import java.nio.file.{Files, Paths}
 
 /** Plan-capture main for the optimization-round deliverables: writes
   * `explain("formatted")` of the named queries to
-  * `<outDir>/<query>_<suffix>.txt`. Unlike [[Explain]] (stdout,
-  * truncated), this captures the COMPLETE formatted plan so before/after
-  * plan claims are checkable offline.
+  * `<outDir>/<query>_<suffix>.txt`: the COMPLETE formatted plan, so
+  * before/after plan claims are checkable offline.
   *
   * Usage: runMain graft.ExplainFmt <outDir> <suffix> [query ...]
   */

@@ -20,6 +20,10 @@ import org.apache.spark.sql.SparkSession
   *    rows are narrow.
   *  - UTC + extensions registered so SQL surfaces behave identically
   *    everywhere.
+  *
+  * Streaming progress retention stays at Spark's default: measurement
+  * reads progress events through a listener ([[Bench.Meter]]), never
+  * through `recentProgress`.
   */
 object GraftSession {
 
@@ -27,11 +31,6 @@ object GraftSession {
     SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", cores)
-      // BenchProbe sums recentProgress addBatch durations; the default
-      // retention (100) would silently drop the EARLIEST micro-batches
-      // of a >100-batch stream and under-report stream data time — the
-      // exact masking the probe exists to eliminate
-      .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -1,13 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-
 import graft.functions._
-import graft.model._
 import graft.operators._
-import graft.streaming.StreamingIndex
 
 /** The engine's query surface: one entry per operator (SURVEY §2) plus the
   * training-data-pipeline extensions, each with a DuckDB oracle where the
@@ -299,15 +293,7 @@ object Queries extends OraclesExt {
     "sim_ann_stats", "dedup_semantic_incremental",
     "dedup_semantic_stream", "sim_ann_retrain", "text_hybrid_stream",
     "pipeline_ppl_buckets", "sample_streaming", "corpus_drift",
-    // round-12 additions — idx_streaming_maintain / idx_catchup close
-    // the instrumented-but-unreported stream_data gap (they call
-    // BenchProbe.addStreamData but were never benched). The remaining
-    // BenchProbe callers off this list (dedup_streaming,
-    // dedup_streaming_neardup, dedup_streaming_spans,
-    // tokenize_streaming) stay off by the family-representative rule:
-    // their streaming families are already benched through
-    // dedup_semantic_stream / events_stream_dedup / sample_streaming,
-    // and their probes surface whenever they are benched ad hoc.
+    // round-12 additions
     "idx_streaming_maintain", "idx_catchup", "text_extract_html",
     "multimodal_webp", "hybrid_batch_sql", "pipeline_multimodal",
     "pipeline_drift_response", "pipeline_pretrain_html",

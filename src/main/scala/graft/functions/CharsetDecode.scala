@@ -252,8 +252,7 @@ object CharsetDecode {
               }
               if (ok && j < n && sb.length > 0) return Some(sb.toString)
             } else {
-              var ok = true
-              while (j < n && ok && body(j) > 0x20 && body(j) < 0x7F &&
+              while (j < n && body(j) > 0x20 && body(j) < 0x7F &&
                 body(j) != ';' && body(j) != '>' && body(j) != '"' &&
                 body(j) != '\'' && body(j) != '/') {
                 sb.append(body(j).toChar); j += 1

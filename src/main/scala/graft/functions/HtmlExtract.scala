@@ -357,7 +357,7 @@ object HtmlExtract {
         } else {
           val closing = c1 == '/'
           val nameStart = i + (if (closing) 2 else 1)
-          var j = tagNameEnd(html, nameStart)
+          val j = tagNameEnd(html, nameStart)
           val name = html.substring(nameStart, j).toLowerCase
           // find the tag's '>', honoring quoted attribute values
           var quote = 0.toChar

@@ -100,7 +100,7 @@ object JsonCollation {
     case s: UTF8String => encString(s.getBytes, out)
     case a: Seq[_] =>
       out.write(TagArray); a.foreach(enc(_, out)); out.write(0x00)
-    case a: Array[Byte] =>
+    case _: Array[Byte] =>
       // BinaryType reaches here through fromInternal: encoding it as an
       // ARRAY OF SIGNED NUMBERS would give binary keys signed order
       // (0x80 before 0x01) at 9 bytes per input byte — fail loudly per

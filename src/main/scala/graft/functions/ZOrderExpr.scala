@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Z-order (Morton) key: interleaves the low `bitsPer` bits of each child

@@ -2,8 +2,6 @@ package graft.operators
 
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
 
@@ -798,7 +796,7 @@ object AnnIndex {
       val ck = graft.plans.LazyCheckpoint.shared(routedPlan)
       val probed = ck.select("c_id").distinct()
         .collect().map(_.getInt(0)).sorted.toSeq
-      scoreProbed(spark, dir, v, ck, probed, corpus, k, rerank,
+      scoreProbed(spark, dir, v, model, ck, probed, corpus, k, rerank,
         idCol, vecCol, allowed, excluded, asOfBatch, broadcastQ = false)
     }
   }
@@ -813,12 +811,15 @@ object AnnIndex {
     * versions carry the SAME model — the [[compact]] contract (the model
     * JSON is copied verbatim), which lets a fold-equivalence gate
     * (multi-batch version vs its compacted fold) pay ONE routing job for
-    * both arms. Sharing across versions with DIFFERENT models would
-    * route against the wrong centroids — callers own that invariant.
+    * both arms. The batch carries the store dir, version and `model` it
+    * was routed with, so [[probeRouted]] refuses a version whose model
+    * differs (a [[retrain]]ed one) instead of scoring against the wrong
+    * centroids.
     */
   final case class Routed(rows: Array[org.apache.spark.sql.Row],
                           schema: org.apache.spark.sql.types.StructType,
-                          probed: Seq[Int], nprobe: Int)
+                          probed: Seq[Int], nprobe: Int,
+                          dir: String, version: Int, model: Model)
 
   def routeQueries(spark: SparkSession, dir: String, queries: DataFrame,
                    nprobe: Int, version: Int = -1): Routed = {
@@ -832,7 +833,7 @@ object AnnIndex {
     val rIdx = plan.schema.fieldIndex("__routes")
     val probed = rows.iterator.flatMap(_.getSeq[Int](rIdx))
       .toArray.distinct.sorted.toSeq
-    Routed(rows, plan.schema, probed, nprobe)
+    Routed(rows, plan.schema, probed, nprobe, dir, v, model)
   }
 
   /** [[probe]] from a pre-resolved [[Routed]] batch — the second half of
@@ -840,7 +841,8 @@ object AnnIndex {
     * lifecycle invariant can share a single routing job (and run their
     * result actions concurrently; the store reads are immutable
     * per-version directories). `version` must carry the SAME model the
-    * batch was routed with ([[routeQueries]] contract).
+    * batch was routed with ([[routeQueries]] contract); a different one
+    * fails with "routed with a different model".
     */
   def probeRouted(spark: SparkSession, dir: String, routed: Routed,
                   corpus: DataFrame, k: Int, rerank: Int = 16,
@@ -850,12 +852,21 @@ object AnnIndex {
                   excluded: Option[DataFrame] = None,
                   asOfBatch: Long = Long.MaxValue): DataFrame = {
     val v = resolveVersion(dir, version)
+    val model =
+      if (dir == routed.dir && v == routed.version) routed.model
+      else {
+        val target = loadModel(dir, v)
+        require(target == routed.model, s"probe of $dir v$v: the queries " +
+          s"were routed with a different model (${routed.dir} " +
+          s"v${routed.version}); route them against v$v")
+        target
+      }
     val local = spark.createDataFrame(
       java.util.Arrays.asList(routed.rows: _*), routed.schema)
     val queryBase = local.select(col("q_id"), col("q_vec"), col("__qn"),
       col("__lut"), explode(col("__routes")).as("c_id"))
-    scoreProbed(spark, dir, v, queryBase, routed.probed, corpus, k, rerank,
-      idCol, vecCol, allowed, excluded, asOfBatch, broadcastQ = true)
+    scoreProbed(spark, dir, v, model, queryBase, routed.probed, corpus, k,
+      rerank, idCol, vecCol, allowed, excluded, asOfBatch, broadcastQ = true)
   }
 
   /** The scoring half shared by both probe shapes: static partition
@@ -863,6 +874,7 @@ object AnnIndex {
     * gates, latest-batch-wins resolution, ADC + exact re-rank.
     */
   private def scoreProbed(spark: SparkSession, dir: String, v: Int,
+                          model: Model,
                           queryBase: DataFrame, probed: Seq[Int],
                           corpus: DataFrame, k: Int, rerank: Int,
                           idCol: String, vecCol: String,
@@ -870,7 +882,6 @@ object AnnIndex {
                           excluded: Option[DataFrame],
                           asOfBatch: Long,
                           broadcastQ: Boolean): DataFrame = {
-    val model = loadModel(dir, v)
     // residual models: the exact q·c(v) bias per probed cluster — a
     // deterministic function of the materialized (q_vec, c_id), so it
     // composes AFTER the route-once point without breaking it

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextOps
 import graft.operators.{Sampling => S}
 
 /** Sequence-shaping operators for training-data preparation: chunking long

@@ -1326,7 +1326,7 @@ object PdfCodec {
     var done = false
     def flush(chars: Int): Unit = {
       var v = acc
-      var pad = 5 - chars
+      val pad = 5 - chars
       var k = pad
       while (k > 0) { v = v * 85 + 84; k -= 1 } // pad with 'u'
       // a group above 2^32-1 ('s8W-!' is the legal max) cannot come

@@ -412,7 +412,7 @@ object PixelCodec {
                           raw: Array[Byte],
                           extraChunks: Seq[(String, Array[Byte])],
                           idatChunk: Int,
-                          interlace: Boolean = false): Array[Byte] = {
+                          interlace: Boolean): Array[Byte] = {
     val deflater = new Deflater()
     deflater.setInput(raw)
     deflater.finish()

@@ -347,7 +347,7 @@ object Retrieval {
   private def scoredTf(spark: SparkSession, dir: String,
                        terms: Seq[String], k1: Double, b: Double,
                        version: Int,
-                       asOfBatch: Option[Long] = None)
+                       asOfBatch: Option[Long])
       : (DataFrame, DataFrame, DataFrame, org.apache.spark.sql.Column) = {
     val v = resolveVersion(dir, version)
     val nPartitions = loadLayout(dir, v).nPartitions

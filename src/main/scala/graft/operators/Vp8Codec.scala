@@ -717,9 +717,9 @@ object Vp8Codec {
     my = 0
     while (my < mbH) {
       val tb = tokenBr(my % nParts)
-      var leftNzY = new Array[Int](4)
-      var leftNzU = new Array[Int](2)
-      var leftNzV = new Array[Int](2)
+      val leftNzY = new Array[Int](4)
+      val leftNzU = new Array[Int](2)
+      val leftNzV = new Array[Int](2)
       var leftNzY2 = 0
       var mx = 0
       while (mx < mbW) {
@@ -1014,7 +1014,7 @@ object Vp8Codec {
     private var range = 255
     private var bottom = 0L
     private var bitCount = 24
-    private var bytes = scala.collection.mutable.ArrayBuffer.empty[Int]
+    private val bytes = scala.collection.mutable.ArrayBuffer.empty[Int]
 
     private def carry(): Unit = {
       var i = bytes.length - 1

@@ -7,7 +7,6 @@ import org.apache.spark.sql.types._
 import graft.functions._
 import graft.model._
 import graft.operators._
-import graft.streaming.StreamingIndex
 
 /** Training-data extensions, first tier: dedup/similarity/text/charset/main-content
   * (pure move out of Queries.scala — no behavior change).
@@ -497,12 +496,8 @@ private[graft] trait ExtQueriesA extends IndexQueries {
       .option("maxFilesPerTrigger", 1).parquet(feedDir)
     // the reference store's one-shot apply touches ONLY dirRef and the
     // static feed files — independent of the live stream maintaining
-    // dir, so the two overlap (guide §2.6). runDrained holds the
-    // session shuffle-partition conf at the stream value while both
-    // run; the apply's window/repartition output is partition-count-
-    // independent (values per row identical), so only its parallelism
-    // is affected.
-    val (sq, _) = graft.plans.Overlap.par(
+    // dir, so the two overlap (guide §2.6)
+    graft.plans.Overlap.par(
       graft.streaming.StreamScale.runDrained(s) {
         graft.operators.AnnIndex.maintainChangeStream(stream, dir,
           version)
@@ -511,7 +506,6 @@ private[graft] trait ExtQueriesA extends IndexQueries {
         .start() },
       graft.operators.AnnIndex.applyMutations(feed, dirRef, batchId = 1L,
         version = vRef, seqnoCol = Some("seqno")))
-    BenchProbe.addStreamData("sim_ann_stream_maintain", sq)
     // sequential compact, deliberately — see sim_ann_upsert's note
     val compacted = graft.operators.AnnIndex.compact(s, dir,
       version = version)
@@ -1296,7 +1290,7 @@ private[graft] trait ExtQueriesA extends IndexQueries {
       .option("maxFilesPerTrigger", 1)
       .option("pathGlobFilter", "*.parquet").parquet(feedDir)
     val sinkDir = Scratch.dir("graft_hybs_out")
-    val sq = graft.streaming.StreamScale.runDrained(s) {
+    graft.streaming.StreamScale.runDrained(s) {
       graft.operators.Retrieval.hybridSearchStream(s, bmDir,
           annDir, stream, emb,
           (res, b) => res.write.mode("overwrite").parquet(s"$sinkDir/b=$b"),
@@ -1305,7 +1299,6 @@ private[graft] trait ExtQueriesA extends IndexQueries {
         .option("checkpointLocation", Scratch.dir("graft_hybs_ckpt"))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start() }
-    BenchProbe.addStreamData("text_hybrid_stream", sq)
     s.read.parquet(sinkDir).select("q_id", "doc_id", "rrf_nano", "rk")
       .orderBy("q_id", "doc_id")
   }
@@ -1670,13 +1663,12 @@ private[graft] trait ExtQueriesA extends IndexQueries {
       .option("maxFilesPerTrigger", 1)
       .option("pathGlobFilter", "*.parquet").parquet(feedDir)
     val stateDir = Scratch.dir("graft_rsv_state")
-    val q = graft.streaming.StreamScale.runDrained(s) {
+    graft.streaming.StreamScale.runDrained(s) {
       graft.streaming.StreamingSample.reservoir(s, stream, stateDir,
           n = 150, weightCol = "n_toks", keyCol = "doc_id")
         .option("checkpointLocation", Scratch.dir("graft_rsv_ckpt"))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start() }
-    BenchProbe.addStreamData("sample_streaming", q)
     graft.streaming.StreamingSample.currentSample(s, stateDir).get
       .select("doc_id", "source", "n_toks", "rk")
       .orderBy("doc_id")

@@ -1,13 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions._
-import graft.model._
-import graft.operators._
-import graft.streaming.StreamingIndex
 
 /** Training-data extensions, second tier: WARC sources, exports, charset funnels, link graph, recrawl
   * (pure move out of Queries.scala — no behavior change).
@@ -307,7 +304,7 @@ private[graft] trait ExtQueriesB extends ExtQueriesA {
       .option("maxFilesPerTrigger", 1).parquet(feedDir)
     val leader = graft.sources.WarcCodec.encodeInfo(
       "software: graft-wet-writer\r\n".getBytes("US-ASCII"))
-    val q = graft.streaming.StreamScale.runDrained(s) {
+    graft.streaming.StreamScale.runDrained(s) {
       stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val w = org.apache.spark.sql.GraftBridge.column(
@@ -338,7 +335,6 @@ private[graft] trait ExtQueriesB extends ExtQueriesA {
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start() }
-    BenchProbe.addStreamData("pipeline_wet_stream", q)
     val g = org.apache.spark.sql.GraftBridge.column(
       graft.functions.WarcGzMembersExpr(
         org.apache.spark.sql.GraftBridge.expression(col("content"))))
@@ -1787,14 +1783,13 @@ private[graft] trait ExtQueriesB extends ExtQueriesA {
       .where(graft.functions.RobotsOps.rulesAllowed(col("rules"),
         col("path")))
     s.catalog.dropTempView("graft_frontier_stream")
-    val q = graft.streaming.StreamScale.runDrained(s) {
+    graft.streaming.StreamScale.runDrained(s) {
       gated.groupBy(col("domain"), col("url"))
       .agg(count(lit(1)).as("n_refs"))
       .writeStream.outputMode("complete").format("memory")
       .queryName("graft_frontier_stream")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start() }
-    BenchProbe.addStreamData("pipeline_frontier_stream", q)
     s.table("graft_frontier_stream")
       .select(col("domain"), col("url")).orderBy("url")
   }
@@ -1867,14 +1862,13 @@ private[graft] trait ExtQueriesB extends ExtQueriesA {
     val schema = docs(s, d).schema
     val stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(feedDir)
-    val q = graft.streaming.StreamScale.runDrained(s) {
+    graft.streaming.StreamScale.runDrained(s) {
       linkPageColumns(stream).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         frontierStoreIngestBatch(s, ref, batch, batchId)
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start() }
-    BenchProbe.addStreamData("pipeline_frontier_store", q)
     EpochStore.readAll(s, ref, "frontier")
       .select(col("domain"), col("url")).orderBy("url")
   }

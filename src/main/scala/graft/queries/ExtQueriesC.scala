@@ -5,9 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions._
-import graft.model._
 import graft.operators._
-import graft.streaming.StreamingIndex
 
 /** Training-data extensions, third tier: frontier/robots, pretrain chains, tokenizer, sampling, multimodal
   * (pure move out of Queries.scala — no behavior change).
@@ -193,12 +191,11 @@ private[graft] trait ExtQueriesC extends ExtQueriesB {
     val funnel = crawlFunnelAgg(crawlFunnelStaged(
       records.select("record")))
     s.catalog.dropTempView("graft_warc_stream")
-    val q = graft.streaming.StreamScale.runDrained(s) {
+    graft.streaming.StreamScale.runDrained(s) {
       funnel.writeStream.outputMode("complete").format("memory")
       .queryName("graft_warc_stream")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start() }
-    BenchProbe.addStreamData("pipeline_warc_stream", q)
     s.table("graft_warc_stream")
   }
 
@@ -243,12 +240,11 @@ private[graft] trait ExtQueriesC extends ExtQueriesB {
     val records = stream.select(g).select(col("member").as("record"))
     val funnel = crawlFunnelAgg(crawlFunnelStaged(records))
     s.catalog.dropTempView("graft_warcgz_stream")
-    val q = graft.streaming.StreamScale.runDrained(s) {
+    graft.streaming.StreamScale.runDrained(s) {
       funnel.writeStream.outputMode("complete").format("memory")
       .queryName("graft_warcgz_stream")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start() }
-    BenchProbe.addStreamData("pipeline_warc_gz_stream", q)
     s.table("graft_warcgz_stream")
   }
 
@@ -542,7 +538,7 @@ private[graft] trait ExtQueriesC extends ExtQueriesB {
       .option("maxFilesPerTrigger", 1)
       .option("pathGlobFilter", "*.parquet").parquet(feedDir)
     val sinkDir = Scratch.dir("graft_semstream_verdicts")
-    val q = graft.streaming.StreamScale.runDrained(s) {
+    graft.streaming.StreamScale.runDrained(s) {
       graft.streaming.StreamingDedup.semanticIngestStore(
         s, dir, stream, emb,
         (verdicts, batchId) => verdicts.write.mode("overwrite")
@@ -551,7 +547,6 @@ private[graft] trait ExtQueriesC extends ExtQueriesB {
       .option("checkpointLocation", Scratch.dir("graft_semstream_ckpt"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start() }
-    BenchProbe.addStreamData("dedup_semantic_stream", q)
     s.read.parquet(sinkDir)
       .select(col("vec_id"), col("nn_id"), round(col("sim"), 6).as("sim"),
         col("is_dup"))
@@ -661,12 +656,11 @@ private[graft] trait ExtQueriesC extends ExtQueriesB {
       dir, sets, Dedup.guardBuckets(buckets, 64))
     val stream = s.readStream.schema(all.schema)
       .option("pathGlobFilter", "documents.parquet").parquet(d)
-    val q = graft.streaming.StreamScale.runDrained(s) {
+    graft.streaming.StreamScale.runDrained(s) {
       graft.streaming.StreamingDedup.nearDupIngestStore(
         s, dir, stream.filter(col("doc_id") % 10 === 7), hashKind = "md5")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start() }
-    BenchProbe.addStreamData("dedup_streaming_neardup", q)
     graft.streaming.EpochStore.readAll(s,
         graft.streaming.EpochStore.current(dir), "pairs")
       .distinct().orderBy("id_a", "id_b")
@@ -689,12 +683,11 @@ private[graft] trait ExtQueriesC extends ExtQueriesB {
       Dedup.spanStoreSigs(all.filter(col("doc_id") % 10 =!= 7), k = 8))
     val stream = s.readStream.schema(all.schema)
       .option("pathGlobFilter", "documents.parquet").parquet(d)
-    val q = graft.streaming.StreamScale.runDrained(s) {
+    graft.streaming.StreamScale.runDrained(s) {
       graft.streaming.StreamingDedup.spanIngestStore(
         s, dir, stream.filter(col("doc_id") % 10 === 7), k = 8)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start() }
-    BenchProbe.addStreamData("dedup_streaming_spans", q)
     graft.streaming.EpochStore.readAll(s,
         graft.streaming.EpochStore.current(dir), "coverage")
       .orderBy("doc_id")
@@ -733,13 +726,12 @@ private[graft] trait ExtQueriesC extends ExtQueriesB {
     val schema = docs(s, d).schema
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(d)
-    val q = graft.streaming.StreamScale.runDrained(s) {
+    graft.streaming.StreamScale.runDrained(s) {
       graft.streaming.StreamingDedup.exactStream(stream)
       .writeStream.outputMode("complete").format("memory")
       .queryName("graft_dedup_stream")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start() }
-    BenchProbe.addStreamData("dedup_streaming", q)
     s.table("graft_dedup_stream").orderBy("text_hash")
   }
 
@@ -814,14 +806,13 @@ private[graft] trait ExtQueriesC extends ExtQueriesB {
         TextOps.tokenStats(col("clean")).getField("n_tokens")
           .as("n_tokens"))
     s.catalog.dropTempView("graft_crawl_stream")
-    val q = graft.streaming.StreamScale.runDrained(s) {
+    graft.streaming.StreamScale.runDrained(s) {
       extracted.groupBy("source")
       .agg(count(lit(1)).as("n_kept"), sum("n_tokens").as("total_tokens"))
       .writeStream.outputMode("complete").format("memory")
       .queryName("graft_crawl_stream")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start() }
-    BenchProbe.addStreamData("pipeline_crawl_stream", q)
     s.table("graft_crawl_stream").orderBy("source")
   }
 
@@ -836,13 +827,12 @@ private[graft] trait ExtQueriesC extends ExtQueriesB {
     val stream = s.readStream.schema(corpus.schema)
       .option("pathGlobFilter", "documents.parquet").parquet(d)
     s.catalog.dropTempView("graft_tokenize_stream")
-    val q = graft.streaming.StreamScale.runDrained(s) {
+    graft.streaming.StreamScale.runDrained(s) {
       graft.streaming.StreamingTokenize.tokenCountStream(stream, merges)
       .writeStream.outputMode("complete").format("memory")
       .queryName("graft_tokenize_stream")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start() }
-    BenchProbe.addStreamData("tokenize_streaming", q)
     s.table("graft_tokenize_stream").orderBy("source")
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -197,10 +197,9 @@ private[graft] trait IndexQueries extends QueryBase {
     val stream = ChangeFeed.fromEvents(
       s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(d))
-    val sq = graft.streaming.StreamScale.runDrained(s) {
+    graft.streaming.StreamScale.runDrained(s) {
       StreamingIndex.maintain(stream, mergeDef, s"$dir/index",
         s"$dir/ckpt") }
-    BenchProbe.addStreamData("idx_streaming_maintain", sq)
     StreamingIndex.currentIndex(s, s"$dir/index", mergeDef)
       .orderBy("key", "docid")
   }
@@ -227,10 +226,9 @@ private[graft] trait IndexQueries extends QueryBase {
       val stream = ChangeFeed.fromEvents(
         s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(d))
-      val sq = graft.streaming.StreamScale.runDrained(s) {
+      graft.streaming.StreamScale.runDrained(s) {
         StreamingIndex.catchup(snapshot, stream, mergeDef,
           s"$dir/index", s"$dir/ckpt", watermark = w) }
-      BenchProbe.addStreamData("idx_catchup", sq)
       StreamingIndex.currentIndex(s, s"$dir/index", mergeDef)
         .orderBy("key", "docid")
     }
@@ -337,14 +335,13 @@ private[graft] trait IndexQueries extends QueryBase {
     def src() = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(d)
     s.catalog.dropTempView("graft_events_dedup_stream")
-    val q = graft.streaming.StreamScale.runDrained(s) {
+    graft.streaming.StreamScale.runDrained(s) {
       graft.streaming.EventWindows
       .dedupStream(src().unionByName(src()))
       .writeStream.outputMode("append").format("memory")
       .queryName("graft_events_dedup_stream")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start() }
-    BenchProbe.addStreamData("events_stream_dedup", q)
     s.table("graft_events_dedup_stream").orderBy("event_id")
   }
 
@@ -363,14 +360,13 @@ private[graft] trait IndexQueries extends QueryBase {
     s.catalog.dropTempView("graft_events_join_stream")
     // stream-stream join: RocksDB + virtual-column-family state (ONE
     // store per partition instead of four — StreamScale.joinStoreConf)
-    val q = graft.streaming.StreamScale.runDrainedConf(s,
+    graft.streaming.StreamScale.runDrainedConf(s,
       graft.streaming.StreamScale.joinStoreConf) {
       graft.streaming.EventWindows.intervalJoinStream(stream)
       .writeStream.outputMode("append").format("memory")
       .queryName("graft_events_join_stream")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start() }
-    BenchProbe.addStreamData("events_stream_join", q)
     s.table("graft_events_join_stream").orderBy("click_id", "purchase_id")
   }
 

@@ -1,13 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-
 import graft.functions._
-import graft.model._
 import graft.operators._
-import graft.streaming.StreamingIndex
 
 /** DuckDB-oracle SQL generators shared by the oracle map (CTE builders generated from the SAME constants the queries pin)
   * (pure move out of Queries.scala — no behavior change).
@@ -1204,7 +1198,7 @@ private[graft] trait OracleHelpers extends ExtQueriesC {
     def chrs(cps: Seq[Int]): String =
       cps.map(c => s"chr($c)").mkString(" || ")
     val plants = legacyCharsetPlants.zipWithIndex
-    val textCases = plants.map { case ((ct, _, _, cps), k) =>
+    val textCases = plants.map { case ((_, _, _, cps), k) =>
       if (cps.isEmpty) s"WHEN $k THEN NULL"
       else s"WHEN $k THEN prefix || ${chrs(cps)}"
     }.mkString("\n    ")

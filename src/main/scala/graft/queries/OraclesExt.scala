@@ -1,13 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-
 import graft.functions._
-import graft.model._
 import graft.operators._
-import graft.streaming.StreamingIndex
 
 /** The oracle map's second half (the Map literal outgrew one file)
   * (pure move out of Queries.scala — no behavior change).

@@ -1,13 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.functions._
 import graft.model._
 import graft.operators._
-import graft.streaming.StreamingIndex
 
 /** The query surface's shared base: the Q signature and the helpers every tier uses
   * (pure move out of Queries.scala — no behavior change).

@@ -2,8 +2,6 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.VersionedSlots

@@ -35,32 +35,21 @@ object StreamScale {
     math.max(4, spark.sparkContext.defaultParallelism / 4)
 
   /** Start and fully drain a (Trigger.AvailableNow) streaming query
-    * under the streaming state-partition rule, then restore the batch
-    * shuffle sizing. The conf must stay at the stream value until the
-    * stream TERMINATES, not just until `start()` returns: the partition
-    * count is read on the micro-batch thread when batch 0 is planned
-    * (and then pinned into the checkpoint), which races a caller-side
-    * restore. Scope the thunk to construction + start of the one query.
-    *
-    * CONCURRENCY HAZARD (necessarily — the conf is session-global and
-    * must hold for the stream's whole lifetime): any batch query
-    * planned on the SAME session while the stream drains — including
-    * batch jobs inside the stream's own foreachBatch, and any action a
-    * caller overlaps with the drain ([[graft.plans.Overlap]]) — plans
-    * with the reduced shuffle-partition count. That changes
-    * PARALLELISM, never values: per-row results are partition-count-
-    * independent everywhere in this engine (callers overlapping work
-    * with a drain own that check). Isolation via `spark.newSession()`
-    * is deliberately NOT used: the bench's queries register temp views
-    * and reuse the session's conf knobs, and a cloned session would
-    * silently detach both.
+    * under the streaming state-partition rule. The conf is held only
+    * while `body` constructs and starts the one query:
+    * `StreamExecution`'s constructor clones the session, so every
+    * micro-batch — and the `sparkSession` of each `foreachBatch` frame —
+    * plans with the conf as it stood at `start()` (the partition count
+    * is then pinned into the checkpoint). The session's own conf is
+    * restored before the drain, so batch work planned on it meanwhile
+    * keeps the batch shuffle sizing.
     */
   def runDrained(spark: SparkSession)(body: => StreamingQuery): StreamingQuery =
     runDrainedConf(spark, Nil)(body)
 
   /** [[runDrained]] plus extra session confs held with the same
-    * lifetime/restore discipline (each saved value — set or unset — is
-    * restored exactly).
+    * start-only lifetime (each saved value — set or unset — is restored
+    * exactly).
     */
   def runDrainedConf(spark: SparkSession, extra: Seq[(String, String)])
                     (body: => StreamingQuery): StreamingQuery = {
@@ -71,14 +60,12 @@ object StreamScale {
       spark.conf.set(k, v)
       k -> prev
     }
-    try {
-      val q = body
-      q.awaitTermination()
-      q
-    } finally saved.reverse.foreach {
+    val q = try body finally saved.reverse.foreach {
       case (k, Some(prev)) => spark.conf.set(k, prev)
       case (k, None) => spark.conf.unset(k)
     }
+    q.awaitTermination()
+    q
   }
 
   /** The STREAM-STREAM-JOIN start configuration: RocksDB state store

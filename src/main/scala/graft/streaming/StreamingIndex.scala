@@ -194,7 +194,7 @@ object StreamingIndex {
             Some(defn.name -> e)
           }
         } finally batch.unpersist()
-        failures.headOption.foreach { case (name, e) =>
+        failures.headOption.foreach { case (_, e) =>
           throw new RuntimeException(
             s"batch $batchId failed for ${failures.map(_._1).mkString(", ")}", e)
         }
@@ -257,7 +257,7 @@ object StreamingIndex {
     */
   private def readParts(spark: SparkSession, indexDir: String, parts: Set[Int],
                         beforeBatch: Long, defn: IndexDef,
-                        proto: Option[DataFrame] = None): DataFrame = {
+                        proto: Option[DataFrame]): DataFrame = {
     val latest = latestPerPart(indexDir, beforeBatch).view
       .filterKeys(parts.contains).toMap
     readPaths(spark, indexDir, latest, defn, proto)

@@ -807,6 +807,29 @@ class AnnIndexSpec extends SparkSpec {
       st.getLong(2) == 0L && st.getLong(3) == 0L)
   }
 
+  test("a Routed batch probes its compact fold; against a retrained " +
+      "model it fails by name") {
+    val dir = tmp
+    val (_, v1) = AnnIndex.build(emb.filter(col("vec_id") % 4 === 0), dir,
+      nCentroids = 8)
+    AnnIndex.ingest(emb.filter(col("vec_id") % 4 =!= 0), dir,
+      batchId = 1L, version = v1)
+    val routed = AnnIndex.routeQueries(spark, dir, queries, nprobe = 8,
+      version = v1)
+    assert(routed.version == v1 && routed.model == AnnIndex.loadModel(dir, v1))
+    val folded = AnnIndex.compact(spark, dir, version = v1)
+    val shared = AnnIndex.probeRouted(spark, dir, routed, emb, k = 5,
+      version = folded).orderBy("q_id", "rank").collect()
+    val direct = AnnIndex.probe(spark, dir, queries, emb, k = 5, nprobe = 8,
+      version = folded).orderBy("q_id", "rank").collect()
+    assert(shared.nonEmpty && shared.sameElements(direct))
+    val (_, retrained) = AnnIndex.retrain(spark, dir, emb, version = folded)
+    val e = intercept[IllegalArgumentException](
+      AnnIndex.probeRouted(spark, dir, routed, emb, k = 5,
+        version = retrained))
+    assert(e.getMessage.contains("routed with a different model"))
+  }
+
   test("SQL wire: type errors are analysis-time failures") {
     GraftExtensions.register(spark)
     val e1 = intercept[Exception](

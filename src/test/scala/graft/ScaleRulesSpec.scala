@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.Trigger
+
 import graft.plans.ScaleOut
 import graft.streaming.StreamScale
 
@@ -42,5 +45,38 @@ class ScaleRulesSpec extends SparkSpec {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     Class.forName(conf("spark.sql.streaming.stateStore.providerClass"))
     assert(conf("spark.sql.streaming.join.stateFormatVersion") == "3")
+  }
+
+  test("a drained stream plans at statePartitions while the session " +
+      "keeps its own shuffle-partition count") {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    val own = (StreamScale.statePartitions(spark) + 3).toString
+    val src = Files.createTempDirectory("gscale_src").resolve("t").toString
+    spark.range(40).repartition(2).write.parquet(src)
+    // (stream session's count, outer session's count) per micro-batch
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    spark.conf.set(key, own)
+    try {
+      StreamScale.runDrained(spark) {
+        spark.readStream.schema(spark.read.parquet(src).schema)
+          .option("maxFilesPerTrigger", 1).parquet(src)
+          .writeStream
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            seen.add((batch.sparkSession.conf.get(key), spark.conf.get(key)))
+            ()
+          }
+          .option("checkpointLocation",
+            Files.createTempDirectory("gscale_ckpt").toString)
+          .trigger(Trigger.AvailableNow())
+          .start()
+      }
+      assert(seen.size == 2)
+      seen.forEach { case (inStream, outer) =>
+        assert(inStream == StreamScale.statePartitions(spark).toString)
+        assert(outer == own)
+      }
+      assert(spark.conf.get(key) == own)
+    } finally spark.conf.set(key, prev)
   }
 }
